@@ -11,6 +11,13 @@ re-read the source, so raw + agg-partials go through a single
 needs its own query (state lives in the streaming runtime, not in
 foreachBatch).
 
+Live (``synchronous=False``), both queries run on Spark's default
+trigger: a micro-batch fires as soon as the previous one has committed
+and new topic files exist. That is closer to the reference's
+flush-every-200-rows-or-3-s JDBC sink (ClickHouseSinks.java:19-21) than
+a fixed interval, which would add half its period to every event's
+freshness.
+
 Sinks are Parquet directories (the ClickHouse-tables analog,
 clickhouse/init.sql:7-75), month-partitioned like the reference's
 ``PARTITION BY toYYYYMM``; checkpointing gives exactly-once into the
@@ -24,6 +31,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from cdc_realtime_pipeline_spark.cdc.envelope import parse_cdc_events
 from cdc_realtime_pipeline_spark.operators.window_agg import trade_window_agg
@@ -52,16 +60,17 @@ def run_cdc_fanout(
     stream_dir: str,
     out_base: str,
     checkpoint_base: str,
-    trigger_seconds: int = 3,
     synchronous: bool = True,
     time_mode: str = "event",
 ):
     """Start the raw+agg fan-out query (and return it).
 
-    trigger=3 s ≙ the reference's JDBC sink flush interval
-    (ClickHouseSinks.java:19-21). ``synchronous=True`` processes all
-    available input and stops — the test/bench mode. ``time_mode`` —
-    see ``_with_event_time`` (``ingest`` = strict reference parity).
+    ``synchronous=True`` processes all available input and stops — the
+    test/bench mode. Otherwise batches fire on arrival: each starts when
+    the previous one has committed and new files exist (the reference
+    flushes every 200 rows or 3 s, ClickHouseSinks.java:19-21).
+    ``time_mode`` — see ``_with_event_time`` (``ingest`` = strict
+    reference parity).
     """
     raw_dir = os.path.join(out_base, "crypto_trades")
     agg_dir = os.path.join(out_base, "trade_agg_partials")
@@ -117,14 +126,7 @@ def run_cdc_fanout(
     writer = parsed.writeStream.foreachBatch(fanout).option(
         "checkpointLocation", os.path.join(checkpoint_base, "fanout")
     )
-    if synchronous:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = writer.start()
-    if synchronous:
-        q.awaitTermination()
-    return q
+    return start_query(writer, synchronous)
 
 
 def run_alert_stream(
@@ -144,6 +146,13 @@ def run_alert_stream(
         .option("checkpointLocation", os.path.join(checkpoint_base, "alerts"))
         .outputMode("append")
     )
+    return start_query(writer, synchronous)
+
+
+def start_query(writer: DataStreamWriter, synchronous: bool) -> StreamingQuery:
+    """Start ``writer``. ``synchronous``: process all available input,
+    then stop and return. Otherwise return the running query, whose
+    batches fire on arrival (Spark's default trigger)."""
     if synchronous:
         writer = writer.trigger(availableNow=True)
     q = writer.start()

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_realtime_pipeline_spark.streaming.job import start_query
+
 
 def latency_partials(batch_df: DataFrame) -> DataFrame:
     """Per-minute latency partial state for one micro-batch
@@ -51,12 +53,7 @@ def start_latency_mv(
     writer = parsed_stream.writeStream.foreachBatch(upsert).option(
         "checkpointLocation", checkpoint_dir
     )
-    if synchronous:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if synchronous:
-        q.awaitTermination()
-    return q
+    return start_query(writer, synchronous)
 
 
 def read_latency_mv(spark: SparkSession, mv_dir: str) -> DataFrame:

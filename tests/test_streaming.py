@@ -328,3 +328,184 @@ def test_stream_topk_per_window_board_invariants(spark, sf_dir):
         # counts non-increasing down the board; equal counts ordered by type
         for a, b in zip(board, board[1:]):
             assert a.n > b.n or (a.n == b.n and a.event_type < b.event_type)
+
+
+# ---------------------------------------------------------------- live path
+
+_OLD_CHECKPOINT_CONF = {
+    # the settings checkpoints were written under before get_spark
+    # switched manager and enabled RocksDB changelogs
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "false",
+}
+
+
+def _stage_waves(spark, sf_dir, n):
+    """Split ``events`` by event-id range (arrival order) into ``n``
+    waves, each one staged topic file, so every key's events stay in
+    order however the live stream batches the waves."""
+    events = load_table(spark, sf_dir, "events")
+    cuts = events.approxQuantile("event_id", [i / n for i in range(1, n)], 0.0)
+    bounds = [None, *cuts, None]
+    waves = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        wave = events
+        if lo is not None:
+            wave = wave.filter(F.col("event_id") > lo)
+        if hi is not None:
+            wave = wave.filter(F.col("event_id") <= hi)
+        d = tempfile.mkdtemp(prefix="wave_")
+        write_cdc_json_files(synthesize_cdc_json_from_events(wave), d, n_files=1)
+        (part,) = [f for f in os.listdir(d) if f.startswith("part-")]
+        waves.append(os.path.join(d, part))
+    ids = sorted(r["event_id"] for r in events.select("event_id").collect())
+    return waves, ids
+
+
+def _publish(wave, topic, i):
+    # one rename: the stream source never sees a partial file
+    os.rename(wave, os.path.join(topic, f"wave-{i:02d}.json"))
+
+
+def _pipeline_output(spark, out):
+    """(raw trade ids, merged aggregate, alerts) of a fan-out + alert
+    run, sorted for comparison."""
+    raw = spark.read.parquet(os.path.join(out, "crypto_trades"))
+    ids = sorted(r["trade_id"] for r in raw.select("trade_id").collect())
+    agg_key = ["window_start", "market"]
+    merged = read_merged_trade_agg(spark, out).toPandas()
+    merged = merged.sort_values(agg_key).reset_index(drop=True)
+    alert_key = ["market", "alert_type", "trade_id"]
+    alerts = spark.read.parquet(os.path.join(out, "anomaly_alerts")).toPandas()
+    alerts = alerts[[*alert_key, "value", "threshold", "detected_at_ms"]]
+    alerts = alerts.sort_values(alert_key).reset_index(drop=True)
+    return ids, merged, alerts
+
+
+def test_live_fanout_and_alerts_across_waves_and_restart(spark, sf_dir):
+    # synchronous=False: the live path, batches firing on arrival. Three
+    # waves, a stop, then a restart on the same checkpoints with a fourth.
+    import pandas as pd
+
+    from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import (
+        detect_anomalies_batch_of_key,
+    )
+
+    waves, ids = _stage_waves(spark, sf_dir, 4)
+    topic = tempfile.mkdtemp(prefix="live_topic_")
+    out = tempfile.mkdtemp(prefix="live_out_")
+    ckpt = tempfile.mkdtemp(prefix="live_ck_")
+
+    def run_waves(wave_ids):
+        queries = [
+            run_cdc_fanout(spark, topic, out, ckpt, synchronous=False),
+            run_alert_stream(spark, topic, out, ckpt, synchronous=False),
+        ]
+        try:
+            for i in wave_ids:
+                _publish(waves[i], topic, i)
+                for q in queries:
+                    q.processAllAvailable()
+        finally:
+            for q in queries:
+                q.stop()
+
+    run_waves([0, 1, 2])
+    run_waves([3])
+
+    got_ids, merged, alerts = _pipeline_output(spark, out)
+    assert got_ids == ids  # every event exactly once
+
+    # merged partials = one batch aggregate over the raw sink
+    raw = spark.read.parquet(os.path.join(out, "crypto_trades")).filter(F.col("op").isNotNull())
+    want_agg = (
+        raw.groupBy(F.window("ts", "5 minutes").alias("w"), "market")
+        .agg(
+            F.count("*").alias("trade_count"),
+            F.sum(F.when(F.col("ask_bid") == "BID", 1).otherwise(0)).alias("bid_count"),
+            F.sum("trade_amount").alias("total_amount"),
+            F.sum("trade_volume").alias("total_volume"),
+            F.min("trade_price").alias("min_price"),
+            F.max("trade_price").alias("max_price"),
+        )
+        .select(F.col("w.start").alias("window_start"), "market", "trade_count", "bid_count",
+                "total_amount", "total_volume", "min_price", "max_price")
+        .toPandas()
+        .sort_values(["window_start", "market"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        merged[list(want_agg.columns)], want_agg, check_exact=False, rtol=1e-9, check_dtype=False
+    )
+
+    # alerts = one pass of the detector per key over the whole topic
+    batch = parse_cdc_events(read_cdc_batch(spark, topic)).filter(F.col("op") == "c").toPandas()
+    replay = []
+    for market, g in batch.groupby("market"):
+        replay.extend(detect_anomalies_batch_of_key(market, g, {})[0])
+    want_alerts = (
+        pd.DataFrame(replay, columns=list(alerts.columns))
+        .sort_values(["market", "alert_type", "trade_id"])
+        .reset_index(drop=True)
+    )
+    assert len(want_alerts) > 0
+    pd.testing.assert_frame_equal(alerts, want_alerts, check_exact=False, rtol=1e-9, check_dtype=False)
+
+
+def _checkpoint_manager(spark, path):
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    return manager.create(jvm.org.apache.hadoop.fs.Path(path), conf).getClass().getSimpleName()
+
+
+def _state_files(ckpt, suffix):
+    return [f for _, _, fs in os.walk(os.path.join(ckpt, "alerts", "state")) for f in fs
+            if f.endswith(suffix)]
+
+
+def test_checkpoints_from_old_settings_resume_under_new_defaults(spark, sf_dir):
+    # Recovery of checkpoints that predate get_spark's streaming confs:
+    # half the topic under the old settings, the rest resumed under the
+    # defaults, must equal one uninterrupted run.
+    import pandas as pd
+
+    waves, _ = _stage_waves(spark, sf_dir, 2)
+    topic = tempfile.mkdtemp(prefix="compat_topic_")
+    out = tempfile.mkdtemp(prefix="compat_out_")
+    ckpt = tempfile.mkdtemp(prefix="compat_ck_")
+    assert _checkpoint_manager(spark, ckpt) == "FileSystemBasedCheckpointFileManager"
+
+    _publish(waves[0], topic, 0)
+    saved = {k: spark.conf.get(k, None) for k in _OLD_CHECKPOINT_CONF}
+    try:
+        for k, v in _OLD_CHECKPOINT_CONF.items():
+            spark.conf.set(k, v)
+        assert _checkpoint_manager(spark, ckpt) == "FileContextBasedCheckpointFileManager"
+        run_cdc_fanout(spark, topic, out, ckpt)
+        run_alert_stream(spark, topic, out, ckpt)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    # RocksDB wrote full snapshots, no changelogs, under the old settings
+    assert _state_files(ckpt, ".zip") and not _state_files(ckpt, ".changelog")
+
+    _publish(waves[1], topic, 1)
+    run_cdc_fanout(spark, topic, out, ckpt)
+    run_alert_stream(spark, topic, out, ckpt)
+    assert _state_files(ckpt, ".changelog")  # resumed under the new defaults
+
+    once_out = tempfile.mkdtemp(prefix="compat_once_out_")
+    once_ckpt = tempfile.mkdtemp(prefix="compat_once_ck_")
+    run_cdc_fanout(spark, topic, once_out, once_ckpt)
+    run_alert_stream(spark, topic, once_out, once_ckpt)
+    got, want = _pipeline_output(spark, out), _pipeline_output(spark, once_out)
+    assert got[0] == want[0]
+    for g, w in zip(got[1:], want[1:]):
+        pd.testing.assert_frame_equal(g, w, check_exact=False, rtol=1e-9)
