@@ -79,6 +79,11 @@ def get_spark(
             "FileSystemBasedCheckpointFileManager",
         )
         .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        # Python workers fork from this package's daemon, which stops
+        # them re-reading pyspark.zip's directory before every task
+        # (see worker_daemon). Workers must be able to import this
+        # package, as its own UDFs already require.
+        .config("spark.python.daemon.module", "cdc_realtime_pipeline_spark.worker_daemon")
     )
     # Memory: only meaningful in local mode when the JVM hasn't started yet.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")

@@ -63,6 +63,19 @@ ALERT_OUT_SCHEMA = T.StructType(
     ]
 )
 
+# The columns the rules read. Only these cross into Python: Spark turns
+# every column of every key's rows into its own pandas Series, and a
+# live micro-batch holds one or two rows for most keys.
+RULE_INPUTS = (
+    "market",
+    "trade_id",
+    "trade_price",
+    "trade_volume",
+    "trade_amount",
+    "upbit_timestamp",
+    "sequential_id",
+)
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("last_price", T.DoubleType()),
@@ -101,15 +114,22 @@ def detect_anomalies_batch_of_key(
     drive it without a streaming query.
     """
     alerts: list[dict] = []
-    pdf = pdf.sort_values("sequential_id")
+    if len(pdf) > 1:
+        pdf = pdf.sort_values("sequential_id")
     lt = _large_threshold(market)
     spt = _spike_threshold(market)
-    for row in pdf.itertuples(index=False):
-        price = float(row.trade_price)
-        vol = float(row.trade_volume)
-        amount = float(row.trade_amount)
-        ts_ms = int(row.upbit_timestamp)
-        tid = int(row.trade_id)
+    # plain column lists: a live micro-batch holds one or two rows per
+    # key, where itertuples' per-call namedtuple class dominated the cost
+    rows = zip(
+        *(pdf[c].tolist() for c in ("trade_price", "trade_volume", "trade_amount",
+                                    "upbit_timestamp", "trade_id"))
+    )
+    for price, vol, amount, ts_ms, tid in rows:
+        price = float(price)
+        vol = float(vol)
+        amount = float(amount)
+        ts_ms = int(ts_ms)
+        tid = int(tid)
 
         # LARGE_TRADE (stateless)
         if amount >= lt:
@@ -172,7 +192,8 @@ def _detector(
         }
     else:
         st = {}
-    pdf = pd.concat(list(pdfs), ignore_index=True)
+    chunks = list(pdfs)
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     alerts, st = detect_anomalies_batch_of_key(market, pdf, st)
     state.update(
         (
@@ -191,9 +212,9 @@ def apply_anomaly_detector(parsed: DataFrame) -> DataFrame:
     """parsed CDC events (stream or batch-shaped) → alert stream.
 
     Insert-only filter first (op='c', CdcPipelineJob.java:80), then
-    keyed stateful processing.
+    keyed stateful processing over ``RULE_INPUTS`` only.
     """
-    inserts = parsed.filter(F.col("op") == "c")
+    inserts = parsed.filter(F.col("op") == "c").select(*RULE_INPUTS)
     return inserts.groupBy("market").applyInPandasWithState(
         _detector,
         outputStructType=ALERT_OUT_SCHEMA,
