@@ -31,7 +31,7 @@ from cdc_realtime_pipeline_spark.operators.dedup import (
 )
 from cdc_realtime_pipeline_spark.session import (
     load_table,
-    memo_persist,
+    memo,
     tracked_persist,
 )
 
@@ -65,6 +65,7 @@ def dup_clusters_connected_components(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
+@memo("neardup_cc_labels")
 def _dup_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label-propagation CC over the Jaccard near-dup edges →
     (doc_id, label) for every doc touching an edge. Shared by the
@@ -72,15 +73,6 @@ def _dup_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session-memoized, r8 — the `_shared_shingles` discipline) every
     dup-graph query that starts from components: the propagation loop
     runs once per session, not once per consuming query."""
-    return memo_persist(
-        "neardup_cc_labels",
-        spark,
-        sf_dir,
-        lambda: _build_component_labels(spark, sf_dir),
-    )
-
-
-def _build_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_docs_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = tracked_persist(
         pairs.unionByName(
@@ -1935,18 +1927,13 @@ def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo("lpa_labels")
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized final-round LPA labels (doc_id, label) — the
     community assignment is an INDEX the way CC labels are: built once
     per (session, sf_dir), consumed by the LPA row itself and by
     ``dup_graph_modularity`` (which would otherwise re-run the 3
     join-rounds to grade the very partition the other row emits)."""
-    return memo_persist(
-        "lpa_labels", spark, sf_dir, lambda: _lpa_labels_build(spark, sf_dir)
-    )
-
-
-def _lpa_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _lpa_edges(spark, sf_dir)
     labels = edges.select(F.col("src").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("label")

@@ -32,8 +32,8 @@ from pyspark.sql.window import Window
 from cdc_realtime_pipeline_spark.operators.lsh_common import derive_bands
 from cdc_realtime_pipeline_spark.session import (
     load_table,
-    memo_persist,
-    register_session_cache,
+    memo,
+    session_state,
     tracked_persist,
 )
 
@@ -87,6 +87,7 @@ FROM deduped GROUP BY event_type ORDER BY event_type
 # unique, so near-dup operators need planted positives — FIXTURES.md §B).
 # doc_id+100000: exact copy; doc_id+200000: truncated copy (near-dup).
 # ---------------------------------------------------------------------------
+@memo("neardup_docs")
 def docs_with_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The planted-dupes corpus every near-dup/text operator reads.
 
@@ -98,20 +99,6 @@ def docs_with_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as the shingle/candidate/PQ memos; at 100 TB this IS
     the staged table a pipeline writes once before its dedup passes.
     """
-    return memo_persist(
-        "neardup_docs",
-        spark,
-        sf_dir,
-        lambda: _docs_with_dupes_build(spark, sf_dir),
-    )
-
-
-def _docs_with_dupes_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The fixture parquet has ONE row group, so the scan is a single
-    # task; everything downstream (shingling = heavy per-row array
-    # expressions) would run on ≤3 cores. Spread it across the cluster
-    # first — on real multi-row-group/multi-file data the scan splits
-    # naturally and this repartition would be unnecessary.
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     exact = docs.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
@@ -153,6 +140,7 @@ def normalize_text(col: Column) -> Column:
     return F.trim(c)
 
 
+@memo("doc_words")
 def doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Base ``documents`` with the normalized token ARRAY appended —
     the ONE tokenization pass the whole text family shares.
@@ -167,13 +155,8 @@ def doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis passes. Downstream expressions are unchanged, so values
     are bit-identical to the former inline tokenization.
     """
-    return memo_persist(
-        "doc_words",
-        spark,
-        sf_dir,
-        lambda: load_table(spark, sf_dir, "documents").withColumn(
-            "words", F.split(normalize_text(F.col("text")), " ")
-        ),
+    return load_table(spark, sf_dir, "documents").withColumn(
+        "words", F.split(normalize_text(F.col("text")), " ")
     )
 
 
@@ -376,21 +359,19 @@ def minhash_band_geometry(
     return r, derive_bands(j_tau**r, miss_target, _MH_MAX_BANDS)
 
 
-# corpus doc count per sf_dir for the derived backstop geometry — the
-# BASE documents parquet count (metadata-only job), cached for the
-# session and registered so release_memos() clears it. The planted
-# dupes add ~23% on top; the geometry consumes log(n), so the
-# undercount shifts the derived R by < 0.1 — irrelevant, and the base
-# count avoids materializing the dupes plan just to size it.
-_DOCS_COUNT_CACHE: dict[str, int] = register_session_cache({})
-
-
 def _docs_count(spark: SparkSession, sf_dir: str) -> int:
-    n = _DOCS_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _DOCS_COUNT_CACHE[sf_dir] = n
-    return n
+    """Corpus doc count for the derived backstop geometry — the BASE
+    documents parquet count (metadata-only job), kept in the session
+    state. The planted dupes add ~23% on top; the geometry consumes
+    log(n), so the undercount shifts the derived R by < 0.1 —
+    irrelevant, and the base count avoids materializing the dupes plan
+    just to size it."""
+    return session_state(
+        "docs_count",
+        spark,
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
 
 
 def _shingle_candidates(
@@ -585,6 +566,7 @@ def dedup_docs_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo("neardup_shingles")
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE persisted shingle table every near-dup operator builds
     on (jaccard/levenshtein via ``_verified_candidates``, containment,
@@ -597,12 +579,7 @@ def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep) shingles the corpus once TOTAL, not once per near-dup
     query — the materialized-intermediate discipline a production
     pipeline applies to any subplan with ≥2 consumers."""
-    return memo_persist(
-        "neardup_shingles",
-        spark,
-        sf_dir,
-        lambda: _word_shingles(docs_with_dupes(spark, sf_dir)),
-    )
+    return _word_shingles(docs_with_dupes(spark, sf_dir))
 
 
 def _sets_from_hashed_shingles(sh_hashed: DataFrame) -> DataFrame:
@@ -615,24 +592,21 @@ def _sets_from_hashed_shingles(sh_hashed: DataFrame) -> DataFrame:
     )
 
 
+@memo("neardup_sets")
 def _shared_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized per-doc shingle-set relation over the shared
     corpus shingles (round 13): consumed by the candidate-stage build
     (3×: band signatures + both verify sides) and by the audit's
     provenance generators — the collect_list shuffle runs once per
     session instead of once per consuming query."""
-    return memo_persist(
-        "neardup_sets",
-        spark,
-        sf_dir,
-        lambda: _sets_from_hashed_shingles(
-            _shared_shingles(spark, sf_dir).select(
-                "doc_id", F.xxhash64("shingle").alias("shingle")
-            )
-        ),
+    return _sets_from_hashed_shingles(
+        _shared_shingles(spark, sf_dir).select(
+            "doc_id", F.xxhash64("shingle").alias("shingle")
+        )
     )
 
 
+@memo("neardup_candidates")
 def _verified_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared, persisted candidates-then-verify stage both
     near-dup text operators consume: (doc_a, doc_b, inter, sz_a, sz_b,
@@ -649,16 +623,11 @@ def _verified_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of rebuilding the entire candidates-then-verify pipeline
     privately (its only difference WAS the flags). Consumers that
     don't need the flags simply never select them."""
-    return memo_persist(
-        "neardup_candidates",
-        spark,
-        sf_dir,
-        lambda: _shingle_candidates(
-            _shared_shingles(spark, sf_dir),
-            provenance=True,
-            n_docs=_docs_count(spark, sf_dir),
-            sets=_shared_sets(spark, sf_dir),
-        ),
+    return _shingle_candidates(
+        _shared_shingles(spark, sf_dir),
+        provenance=True,
+        n_docs=_docs_count(spark, sf_dir),
+        sets=_shared_sets(spark, sf_dir),
     )
 
 
@@ -935,11 +904,10 @@ FROM agg ORDER BY source_a, source_b
 
 # The containment decision, named once: pairs must share at least
 # CONTAINMENT_MIN_INTER shingles (noise floor for tiny docs) and have
-# C = |A∩B| / min(|A|,|B|) ≥ CONTAINMENT_TAU. tools/fs_lever_probe.py
-# scores the candidate generator against exactly this predicate via
-# ``containment_filter`` — one definition, so the probe can never
-# silently measure a different pair family than the shipped operator
-# (round-13 review).
+# C = |A∩B| / min(|A|,|B|) ≥ CONTAINMENT_TAU. ``containment_filter``
+# is the one definition; the round-13 containment-recall measurement
+# scored the candidate generator against exactly this predicate
+# (table in SCALING.md §Round-13).
 CONTAINMENT_TAU = 0.9
 CONTAINMENT_MIN_INTER = 5
 
@@ -1089,6 +1057,7 @@ def _sigs_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     return sh.groupBy("doc_id").agg(*mins)
 
 
+@memo("minhash_sigs16")
 def _minhash_sigs16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized 16-permutation signature table over the
     MEMOIZED shingle relation — the one signature build the MinHash
@@ -1099,12 +1068,7 @@ def _minhash_sigs16(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shingle relation (``_shared_shingles`` IS
     ``_word_shingles(docs_with_dupes(...))``), and the signature
     algebra is literally the same function (``_sigs_from_shingles``)."""
-    return memo_persist(
-        "minhash_sigs16",
-        spark,
-        sf_dir,
-        lambda: _sigs_from_shingles(_shared_shingles(spark, sf_dir), 16),
-    )
+    return _sigs_from_shingles(_shared_shingles(spark, sf_dir), 16)
 
 
 def dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1717,8 +1681,8 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     join pair-sized relations on doc_id; parameter estimation is one
     1-row aggregate broadcast back. Banding is a bounded aggregate.
 
-    100 TB lever — MEASURED in round 12 (VERDICT r11 #2;
-    tools/fs_lever_probe.py, table in SCALING.md §Round-12): every
+    100 TB lever — MEASURED in round 12 (VERDICT r11 #2; table in
+    SCALING.md §Round-12): every
     stage here is Θ(candidate-pair mass) and ``MAX_SHINGLE_DF`` does
     control that mass (16 → 8 cuts verified candidates 16× with
     recall 1.0 at J ≥ 0.6 — the band backstop holds exactly as its

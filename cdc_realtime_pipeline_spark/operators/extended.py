@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cdc_realtime_pipeline_spark.session import load_table, tracked_persist
+from cdc_realtime_pipeline_spark.session import load_table, memo, tracked_persist
 
 SESSION_GAP_MIN = 30
 
@@ -1840,44 +1840,36 @@ ORDER BY r_score, f_score, m_score
 _COPURCHASE_TOP = 25
 
 
+@memo("basket_items")
 def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session memo: per-order DISTINCT parts — the basket relation
     both market-basket consumers (`copurchase_pairs_topk`,
     `market_basket_rules`) key every stage on (round 13, guide §5:
     the `neardup_candidates` discipline applied to baskets). Prewarmed
     untimed by bench.py like every memo slot."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
-    return memo_persist(
-        "basket_items",
-        spark,
-        sf_dir,
-        lambda: load_table(spark, sf_dir, "lineitem")
+    return (
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
-        .distinct(),
+        .distinct()
     )
 
 
+@memo("basket_pairs")
 def _basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session memo: unordered same-order part pairs with their
     co-occurrence count c_ab — the shared candidate stage of the two
     basket queries (copurchase ranks it raw; market_basket_rules
     filters c_ab ≥ 2 and joins marginals). Built from the
     `basket_items` memo so the distinct pass is shared too."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
-    def build() -> DataFrame:
-        items = _basket_items(spark, sf_dir)
-        a = items.select("l_orderkey", F.col("l_partkey").alias("p_a"))
-        b = items.select("l_orderkey", F.col("l_partkey").alias("p_b"))
-        return (
-            a.join(b, "l_orderkey")
-            .filter(F.col("p_a") < F.col("p_b"))
-            .groupBy("p_a", "p_b")
-            .agg(F.count("*").alias("c_ab"))
-        )
-
-    return memo_persist("basket_pairs", spark, sf_dir, build)
+    items = _basket_items(spark, sf_dir)
+    a = items.select("l_orderkey", F.col("l_partkey").alias("p_a"))
+    b = items.select("l_orderkey", F.col("l_partkey").alias("p_b"))
+    return (
+        a.join(b, "l_orderkey")
+        .filter(F.col("p_a") < F.col("p_b"))
+        .groupBy("p_a", "p_b")
+        .agg(F.count("*").alias("c_ab"))
+    )
 
 
 def copurchase_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1947,6 +1939,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo("journey_counts")
 def _journey_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session memo: (from_type, to_type, n) user-journey transition
     counts — the corpus-scale per-user lag window + |types|² aggregate
@@ -1954,22 +1947,17 @@ def _journey_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `events_entropy_rate` each re-ran privately (round 13, guide §5:
     the tfidf_weights discipline). Everything downstream of this memo
     operates on the ≤ |types|²-row relation."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
-    def build() -> DataFrame:
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "event_type", "ts", "event_id"
-        )
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        steps = ev.withColumn(
-            "next_type", F.lead("event_type").over(w)
-        ).filter(F.col("next_type").isNotNull())
-        return steps.groupBy(
-            F.col("event_type").alias("from_type"),
-            F.col("next_type").alias("to_type"),
-        ).agg(F.count("*").alias("n"))
-
-    return memo_persist("journey_counts", spark, sf_dir, build)
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    steps = ev.withColumn(
+        "next_type", F.lead("event_type").over(w)
+    ).filter(F.col("next_type").isNotNull())
+    return steps.groupBy(
+        F.col("event_type").alias("from_type"),
+        F.col("next_type").alias("to_type"),
+    ).agg(F.count("*").alias("n"))
 
 
 def events_markov_next_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

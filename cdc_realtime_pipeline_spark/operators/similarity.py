@@ -28,8 +28,7 @@ from pyspark.sql.window import Window
 from cdc_realtime_pipeline_spark.operators.lsh_common import derive_bands
 from cdc_realtime_pipeline_spark.session import (
     load_table,
-    memo_persist,
-    register_session_cache,
+    memo,
     tracked_persist,
 )
 
@@ -472,30 +471,14 @@ _LSH_TARGET_BUCKET = 256  # expected unrelated-pair band-bucket size cap
 # banded-LSH regime (use exact=True or a lower-τ family like MinHash).
 _LSH_MAX_BANDS = 4096
 
-# corpus count per sf_dir, cached for the session — a parquet count()
-# is metadata-only (no row materialization) but still a job, so pay it
-# once per fixture, not once per dedup_embeddings_cosine call;
-# registered so release_memos() clears it with the other
-# static-fixture state (a fixture-rewriting tool must not serve a
-# stale count into the derived geometry)
-_EMB_COUNT_CACHE: dict[str, int] = register_session_cache({})
-
-
+@memo("emb_count")
 def _corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    n = _EMB_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = load_table(spark, sf_dir, "embeddings").count()
-        _EMB_COUNT_CACHE[sf_dir] = n
-    return n
-
-
-def _corpus_count_prewarm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prewarm shim (plans/prewarm.py slot ``emb_count``): pay the
-    geometry-derivation count() job untimed with the other
-    once-per-corpus builds so `dedup_embeddings_cosine`'s timed bench
-    row stays comparable to pre-parameterization rounds."""
-    _corpus_count(spark, sf_dir)
-    return load_table(spark, sf_dir, "embeddings").select("vec_id").limit(1)
+    """Embeddings corpus count for the derived LSH geometry — a parquet
+    count() is metadata-only (no row materialization) but still a job,
+    so it is paid once per fixture, not once per
+    dedup_embeddings_cosine call, and untimed in the prewarm with the
+    other once-per-corpus builds."""
+    return load_table(spark, sf_dir, "embeddings").count()
 
 
 def lsh_band_geometry(
@@ -1837,6 +1820,7 @@ _SEM_SEED_MOD = 11  # seed stride (n/11 seeds ≥ n/64 clusters at any n)
 _SEM_PROBES = 2  # coarse cells searched per point (IVF multi-probe)
 
 
+@memo("sem_labels")
 def _sem_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, nrm, cluster): the SemDeDup two-level
     cluster-assignment relation — the staging table a SemDeDup
@@ -1847,157 +1831,153 @@ def _sem_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shingles, PQ/OPQ codebook distances) rather than inside every
     consuming query's timed line. Plan unchanged from the former
     inline form — values are bit-identical."""
+    base = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+    )
+    # corpus-sized cluster count (integer arithmetic — bit-identical
+    # to the oracle's scalar subquery): K = max(32, ceil(n/64)),
+    # coarse level K1 = ceil(sqrt(K))
+    kdf = (
+        base.agg(F.count("*").alias("n_corpus"))
+        .select(
+            F.greatest(
+                F.lit(_SEM_K).cast("long"),
+                F.expr(f"(n_corpus + {_SEM_TARGET - 1}) div {_SEM_TARGET}"),
+            ).alias("semk")
+        )
+        .select("semk", F.ceil(F.sqrt("semk")).cast("long").alias("k1"))
+    )
 
-    def build() -> DataFrame:
-            base = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id",
-                F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-            )
-            # corpus-sized cluster count (integer arithmetic — bit-identical
-            # to the oracle's scalar subquery): K = max(32, ceil(n/64)),
-            # coarse level K1 = ceil(sqrt(K))
-            kdf = (
-                base.agg(F.count("*").alias("n_corpus"))
-                .select(
-                    F.greatest(
-                        F.lit(_SEM_K).cast("long"),
-                        F.expr(f"(n_corpus + {_SEM_TARGET - 1}) div {_SEM_TARGET}"),
-                    ).alias("semk")
-                )
-                .select("semk", F.ceil(F.sqrt("semk")).cast("long").alias("k1"))
-            )
-
-            def _akey(ne, e, s, ns, rank, m):
-                # the shared assignment discipline: 6dp-rounded squared
-                # distance → integer grid → min-key with rank tiebreak.
-                # ``ne``/``ns`` are the point's/seed's PRECOMPUTED squared
-                # norms (r9): the fold producing them is the same F.aggregate
-                # over the same array, and the (a − b) + c association is
-                # unchanged, so the double result is bit-identical to the
-                # former inline dot(e,e)/dot(s,s) — but each norm is now
-                # evaluated once per vector instead of once per (point, seed)
-                # pair, cutting 2 of the 3 64-element folds on every
-                # assignment row (the n·K1 + n·2K/K1 hot paths below).
-                d2 = F.round(ne - 2 * dot(e, s) + ns, 6)
-                return F.floor(d2 * 1000000 + F.lit(0.5)).cast("long") * m + rank
-            near = base.filter(F.col("vec_id") % 9 == 0).select(
-                (F.col("vec_id") + 10000).alias("vec_id"),
-                F.transform(
-                    "embedding", lambda x, i: F.when(i == 0, x + F.lit(0.15)).otherwise(x)
-                ).alias("embedding"),
-            )
-            emb = base.unionByName(near).withColumn(
-                "ne", dot(F.col("embedding"), F.col("embedding"))
-            )
-            w = Window.orderBy("vec_id")
-            seeds = (
-                base.filter(F.pmod("vec_id", F.lit(_SEM_SEED_MOD)) == 0)
-                .withColumn("seed_rank", F.row_number().over(w) - 1)
-                .crossJoin(F.broadcast(kdf))
-                .filter(F.col("seed_rank") < F.col("semk"))
-                .select("seed_rank", "semk", "k1", F.col("embedding").alias("s"))
-                .withColumn("s2", dot(F.col("s"), F.col("s")))
-            )
-            coarse = seeds.filter(F.col("seed_rank") < F.col("k1")).select(
-                F.col("seed_rank").alias("coarse_rank"),
-                F.col("s").alias("cs"),
-                F.col("s2").alias("cs2"),
-            )
-            # level 1a: fine seed → coarse cell (K × K1 dots — tiny)
-            seed_cells = (
-                seeds.crossJoin(F.broadcast(coarse))
-                .select(
-                    "seed_rank",
-                    "semk",
-                    "k1",
-                    "s",
-                    "s2",
-                    _akey(
-                        F.col("s2"), F.col("s"), F.col("cs"), F.col("cs2"),
-                        F.col("coarse_rank"), F.col("k1"),
-                    ).alias("ckey"),
-                )
-                .groupBy("seed_rank")
-                .agg(
-                    F.min("ckey").alias("ckey"),
-                    F.first("s").alias("s"),
-                    F.first("s2").alias("s2"),
-                    F.min("semk").alias("semk"),
-                    F.min("k1").alias("k1"),
-                )
-                .select(
-                    "seed_rank", "semk", "s", "s2",
-                    F.pmod("ckey", F.col("k1")).alias("cell"),
-                )
-            )
-            # level 1b: point → its _SEM_PROBES nearest coarse cells. The
-            # top-P selection is a groupBy (map-side combine: the K1 integer
-            # keys collapse to one P-slice per point BEFORE the shuffle, so
-            # ~n combined rows move, not n×K1 embedding-carrying rows), then
-            # an explode back to one row per probed cell.
-            pt_cells = (
-                emb.crossJoin(F.broadcast(coarse.crossJoin(kdf.select("k1"))))
-                .select(
-                    "vec_id",
-                    "embedding",
-                    "ne",
-                    "k1",
-                    _akey(
-                        F.col("ne"), F.col("embedding"), F.col("cs"), F.col("cs2"),
-                        F.col("coarse_rank"), F.col("k1"),
-                    ).alias("ckey"),
-                )
-                .groupBy("vec_id")
-                .agg(
-                    F.slice(F.array_sort(F.collect_list("ckey")), 1, _SEM_PROBES).alias(
-                        "cks"
-                    ),
-                    F.first("embedding").alias("embedding"),
-                    F.first("ne").alias("ne"),
-                    F.min("k1").alias("k1"),
-                )
-                .select("vec_id", "embedding", "ne", "k1", F.explode("cks").alias("ckey"))
-                .select(
-                    "vec_id", "embedding", "ne",
-                    F.pmod("ckey", F.col("k1")).alias("cell"),
-                )
-            )
-            # level 2: point → nearest fine seed WITHIN its coarse cell
-            # (~n·K/K1 dots); the memo's persist is the barrier that
-            # keeps the consumer's a/b self-join from executing the
-            # whole assignment subtree twice (same discipline as the
-            # LSH probes)
-            return (
-                pt_cells.join(F.broadcast(seed_cells), "cell")
-                .select(
-                    "vec_id",
-                    "embedding",
-                    "ne",
-                    "semk",
-                    _akey(
-                        F.col("ne"), F.col("embedding"), F.col("s"), F.col("s2"),
-                        F.col("seed_rank"), F.col("semk"),
-                    ).alias("key"),
-                )
-                .groupBy("vec_id")
-                .agg(
-                    F.min("key").alias("key"),
-                    F.first("embedding").alias("embedding"),
-                    F.first("ne").alias("ne"),
-                    F.min("semk").alias("semk"),
-                )
-                .select(
-                    "vec_id",
-                    "embedding",
-                    # norm precomputed per vector (bit-identical to the
-                    # per-pair recompute: sqrt of the same fold over the same
-                    # inputs) — 1 fold per pair below instead of 3
-                    F.sqrt(F.col("ne")).alias("nrm"),
-                    F.pmod("key", F.col("semk")).alias("cluster"),
-                )
-            )
-
-    return memo_persist("sem_labels", spark, sf_dir, build)
+    def _akey(ne, e, s, ns, rank, m):
+        # the shared assignment discipline: 6dp-rounded squared
+        # distance → integer grid → min-key with rank tiebreak.
+        # ``ne``/``ns`` are the point's/seed's PRECOMPUTED squared
+        # norms (r9): the fold producing them is the same F.aggregate
+        # over the same array, and the (a − b) + c association is
+        # unchanged, so the double result is bit-identical to the
+        # former inline dot(e,e)/dot(s,s) — but each norm is now
+        # evaluated once per vector instead of once per (point, seed)
+        # pair, cutting 2 of the 3 64-element folds on every
+        # assignment row (the n·K1 + n·2K/K1 hot paths below).
+        d2 = F.round(ne - 2 * dot(e, s) + ns, 6)
+        return F.floor(d2 * 1000000 + F.lit(0.5)).cast("long") * m + rank
+    near = base.filter(F.col("vec_id") % 9 == 0).select(
+        (F.col("vec_id") + 10000).alias("vec_id"),
+        F.transform(
+            "embedding", lambda x, i: F.when(i == 0, x + F.lit(0.15)).otherwise(x)
+        ).alias("embedding"),
+    )
+    emb = base.unionByName(near).withColumn(
+        "ne", dot(F.col("embedding"), F.col("embedding"))
+    )
+    w = Window.orderBy("vec_id")
+    seeds = (
+        base.filter(F.pmod("vec_id", F.lit(_SEM_SEED_MOD)) == 0)
+        .withColumn("seed_rank", F.row_number().over(w) - 1)
+        .crossJoin(F.broadcast(kdf))
+        .filter(F.col("seed_rank") < F.col("semk"))
+        .select("seed_rank", "semk", "k1", F.col("embedding").alias("s"))
+        .withColumn("s2", dot(F.col("s"), F.col("s")))
+    )
+    coarse = seeds.filter(F.col("seed_rank") < F.col("k1")).select(
+        F.col("seed_rank").alias("coarse_rank"),
+        F.col("s").alias("cs"),
+        F.col("s2").alias("cs2"),
+    )
+    # level 1a: fine seed → coarse cell (K × K1 dots — tiny)
+    seed_cells = (
+        seeds.crossJoin(F.broadcast(coarse))
+        .select(
+            "seed_rank",
+            "semk",
+            "k1",
+            "s",
+            "s2",
+            _akey(
+                F.col("s2"), F.col("s"), F.col("cs"), F.col("cs2"),
+                F.col("coarse_rank"), F.col("k1"),
+            ).alias("ckey"),
+        )
+        .groupBy("seed_rank")
+        .agg(
+            F.min("ckey").alias("ckey"),
+            F.first("s").alias("s"),
+            F.first("s2").alias("s2"),
+            F.min("semk").alias("semk"),
+            F.min("k1").alias("k1"),
+        )
+        .select(
+            "seed_rank", "semk", "s", "s2",
+            F.pmod("ckey", F.col("k1")).alias("cell"),
+        )
+    )
+    # level 1b: point → its _SEM_PROBES nearest coarse cells. The
+    # top-P selection is a groupBy (map-side combine: the K1 integer
+    # keys collapse to one P-slice per point BEFORE the shuffle, so
+    # ~n combined rows move, not n×K1 embedding-carrying rows), then
+    # an explode back to one row per probed cell.
+    pt_cells = (
+        emb.crossJoin(F.broadcast(coarse.crossJoin(kdf.select("k1"))))
+        .select(
+            "vec_id",
+            "embedding",
+            "ne",
+            "k1",
+            _akey(
+                F.col("ne"), F.col("embedding"), F.col("cs"), F.col("cs2"),
+                F.col("coarse_rank"), F.col("k1"),
+            ).alias("ckey"),
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.slice(F.array_sort(F.collect_list("ckey")), 1, _SEM_PROBES).alias(
+                "cks"
+            ),
+            F.first("embedding").alias("embedding"),
+            F.first("ne").alias("ne"),
+            F.min("k1").alias("k1"),
+        )
+        .select("vec_id", "embedding", "ne", "k1", F.explode("cks").alias("ckey"))
+        .select(
+            "vec_id", "embedding", "ne",
+            F.pmod("ckey", F.col("k1")).alias("cell"),
+        )
+    )
+    # level 2: point → nearest fine seed WITHIN its coarse cell
+    # (~n·K/K1 dots); the memo's persist is the barrier that
+    # keeps the consumer's a/b self-join from executing the
+    # whole assignment subtree twice (same discipline as the
+    # LSH probes)
+    return (
+        pt_cells.join(F.broadcast(seed_cells), "cell")
+        .select(
+            "vec_id",
+            "embedding",
+            "ne",
+            "semk",
+            _akey(
+                F.col("ne"), F.col("embedding"), F.col("s"), F.col("s2"),
+                F.col("seed_rank"), F.col("semk"),
+            ).alias("key"),
+        )
+        .groupBy("vec_id")
+        .agg(
+            F.min("key").alias("key"),
+            F.first("embedding").alias("embedding"),
+            F.first("ne").alias("ne"),
+            F.min("semk").alias("semk"),
+        )
+        .select(
+            "vec_id",
+            "embedding",
+            # norm precomputed per vector (bit-identical to the
+            # per-pair recompute: sqrt of the same fold over the same
+            # inputs) — 1 fold per pair below instead of 3
+            F.sqrt(F.col("ne")).alias("nrm"),
+            F.pmod("key", F.col("semk")).alias("cluster"),
+        )
+    )
 
 
 def dedup_embeddings_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2344,8 +2324,7 @@ def embeddings_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference for that kernel. Distances rounded 8dp before the
     argmin on both engines (ties → lowest code id).
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    dists = _pq_base_dists(spark, emb, sf_dir)
+    dists = _pq_base_dists(spark, sf_dir)
     w = Window.partitionBy("vec_id", "sub").orderBy(F.asc("d2"), F.asc("code"))
     assigned = dists.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
     return (
@@ -2448,27 +2427,16 @@ def _pq_codebook(spark: SparkSession) -> DataFrame:
     return cb.select("sub", "code", "sdim", (_pq_uniform(key) - 0.5).alias("c"))
 
 
-def _pq_base_dists(spark: SparkSession, emb: DataFrame, sf_dir: str) -> DataFrame:
+@memo("pq_base_dists")
+def _pq_base_dists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(vec, subspace, code) squared distance, 8dp-rounded — the
     relation both the stored-code argmin and the query LUT cut from.
     Session-memoized across the five PQ consumers (assign / ADC /
     kernel / IVF-PQ / re-rank — the `_shared_shingles` discipline):
     at 100 TB this relation IS the index-build artifact you persist
-    once, not a per-query recomputation. NOTE: callers always pass the
-    full embeddings load for ``emb`` and the ``sf_dir`` it came from;
-    the memo is keyed on (slot, session, sf_dir, schema), so two
-    corpora in one session get distinct memo slots (ADVICE r8 — the
-    earlier inputFiles()-derived key fell back to a shared sentinel).
+    once, not a per-query recomputation.
     """
-    return memo_persist(
-        "pq_base_dists",
-        spark,
-        emb.schema.simpleString() + "|" + sf_dir,
-        lambda: _pq_base_dists_build(spark, emb),
-    )
-
-
-def _pq_base_dists_build(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "x")
     ).select(
@@ -2487,13 +2455,13 @@ def _pq_base_dists_build(spark: SparkSession, emb: DataFrame) -> DataFrame:
     )
 
 
-def _adc_scan(spark: SparkSession, emb: DataFrame, sf_dir: str) -> DataFrame:
+def _adc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flat ADC scan relation (query_id, vec_id, adc_dist) shared
     by the top-K and re-rank legs: stored codes (argmin per subspace,
     queries excluded) ⋈ broadcast per-query S×C LUT, summed per
     (query, vec). One construction so the re-rank stage prices the
     SAME approximate distances the search stage ranked by."""
-    return _adc_scan_from(_pq_base_dists(spark, emb, sf_dir))
+    return _adc_scan_from(_pq_base_dists(spark, sf_dir))
 
 
 def _adc_scan_from(base_dists: DataFrame) -> DataFrame:
@@ -2569,8 +2537,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Query vectors are the shared ``vec_id < N_QUERIES`` set, excluded
     from the database side (self-matches are vacuous).
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    adc = _adc_scan(spark, emb, sf_dir)
+    adc = _adc_scan(spark, sf_dir)
     wq = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
     return (
         adc.withColumn("rank", F.row_number().over(wq))
@@ -2622,8 +2589,7 @@ def similarity_pq_adc_topk_kernel(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     import pandas as pd  # noqa: F401 — mapInPandas contract
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    base_dists = _pq_base_dists(spark, emb, sf_dir)
+    base_dists = _pq_base_dists(spark, sf_dir)
     wc = Window.partitionBy("vec_id", "sub").orderBy(F.asc("d2"), F.asc("code"))
     codes_packed = (
         base_dists.filter(F.col("vec_id") >= N_QUERIES)
@@ -2726,7 +2692,7 @@ def similarity_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     wq = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("vec_id"))
     cand = (
-        _adc_scan(spark, emb, sf_dir)
+        _adc_scan(spark, sf_dir)
         .withColumn("adc_rank", F.row_number().over(wq))
         .filter(F.col("adc_rank") <= _RERANK_R)
     )
@@ -2846,7 +2812,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qcells = assigned.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("cell_id").alias("qcell")
     )
-    base_dists = _pq_base_dists(spark, emb, sf_dir)
+    base_dists = _pq_base_dists(spark, sf_dir)
     wc = Window.partitionBy("vec_id", "sub").orderBy(F.asc("d2"), F.asc("code"))
     codes = (
         base_dists.filter(F.col("vec_id") >= N_QUERIES)
@@ -2993,6 +2959,7 @@ def _opq_x(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", (F.col("p") + 1).alias("pos"), "val")
 
 
+@memo("opq_xr")
 def _opq_rotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cand, vec_id, pos, xr): all four candidate rotations applied to
     the corpus. Rotated coordinates are rounded 6dp (shared nudge) so
@@ -3017,92 +2984,89 @@ def _opq_rotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     over x (partner self-join + broadcast u ⋈ per-vec f), not four
     unioned branches: at 100 TB this is 2 corpus scans total (Gram +
     emit) versus the previous ~8."""
-
-    def build() -> DataFrame:
-        x = tracked_persist(_opq_x(spark, sf_dir))
-        # one corpus pass: uncentered second moment, map-side combined
-        xa = x.select("vec_id", F.col("pos").alias("j"), F.col("val").alias("xj"))
-        xb = x.select("vec_id", F.col("pos").alias("k"), F.col("val").alias("xk"))
-        m_rows = (
-            xa.join(xb, "vec_id")
-            .groupBy("j", "k")
-            .agg(F.sum(F.col("xj") * F.col("xk")).alias("m"))
-            .collect()
-        )
-        M = [[0.0] * 64 for _ in range(64)]
-        for r in m_rows:
-            M[r["j"] - 1][r["k"] - 1] = r["m"]
-        # 3 power iterations on the driver-side 64×64 — same rounding
-        # schedule as the declarative twin (7dp per-iteration, 5dp
-        # loadings, +1e-9 nudges), so the oracle's CTE chain lands on
-        # the identical u
-        v = [1.0 / 8.0] * 64
-        for it in range(3):
-            w = [sum(M[j][k] * v[k] for k in range(64)) for j in range(64)]
-            l = sum(wj * wj for wj in w) ** 0.5
-            if it < 2:
-                v = [round(wj / l + 1e-9, 7) + 0.0 for wj in w]
-        v1 = [round(wj / l + 1e-9, 5) + 0.0 for wj in w]
-        # Householder u = v1 − e1: H = I − 2uuᵀ/uᵀu maps v1 → e1 and is
-        # exactly orthogonal whatever rounding did to v1
-        uv = [lv - (1.0 if i == 0 else 0.0) for i, lv in enumerate(v1)]
-        uu = sum(e * e for e in uv)
-        u = spark.createDataFrame(
-            [(i + 1, e) for i, e in enumerate(uv)], "pos long, uv double"
-        )
-        fh = (
-            x.join(F.broadcast(u), "pos")
-            .groupBy("vec_id")
-            .agg(
-                (2.0 * F.sum(F.col("val") * F.col("uv")) / F.lit(uu)).alias(
-                    "f"
-                )
+    x = tracked_persist(_opq_x(spark, sf_dir))
+    # one corpus pass: uncentered second moment, map-side combined
+    xa = x.select("vec_id", F.col("pos").alias("j"), F.col("val").alias("xj"))
+    xb = x.select("vec_id", F.col("pos").alias("k"), F.col("val").alias("xk"))
+    m_rows = (
+        xa.join(xb, "vec_id")
+        .groupBy("j", "k")
+        .agg(F.sum(F.col("xj") * F.col("xk")).alias("m"))
+        .collect()
+    )
+    M = [[0.0] * 64 for _ in range(64)]
+    for r in m_rows:
+        M[r["j"] - 1][r["k"] - 1] = r["m"]
+    # 3 power iterations on the driver-side 64×64 — same rounding
+    # schedule as the declarative twin (7dp per-iteration, 5dp
+    # loadings, +1e-9 nudges), so the oracle's CTE chain lands on
+    # the identical u
+    v = [1.0 / 8.0] * 64
+    for it in range(3):
+        w = [sum(M[j][k] * v[k] for k in range(64)) for j in range(64)]
+        l = sum(wj * wj for wj in w) ** 0.5
+        if it < 2:
+            v = [round(wj / l + 1e-9, 7) + 0.0 for wj in w]
+    v1 = [round(wj / l + 1e-9, 5) + 0.0 for wj in w]
+    # Householder u = v1 − e1: H = I − 2uuᵀ/uᵀu maps v1 → e1 and is
+    # exactly orthogonal whatever rounding did to v1
+    uv = [lv - (1.0 if i == 0 else 0.0) for i, lv in enumerate(v1)]
+    uu = sum(e * e for e in uv)
+    u = spark.createDataFrame(
+        [(i + 1, e) for i, e in enumerate(uv)], "pos long, uv double"
+    )
+    fh = (
+        x.join(F.broadcast(u), "pos")
+        .groupBy("vec_id")
+        .agg(
+            (2.0 * F.sum(F.col("val") * F.col("uv")) / F.lit(uu)).alias(
+                "f"
             )
         )
-        # ONE emit pass: partner value (cross-subspace Givens pair) via
-        # equi self-join, Householder f per vec, then the 4 candidates
-        # as an inline explode — identity stays unrounded
-        g = x.withColumn(
-            "ppos",
-            F.when(F.col("pos") <= 32, F.col("pos") + 32).otherwise(
-                F.col("pos") - 32
-            ),
-        )
-        b = x.select(
-            "vec_id", F.col("pos").alias("ppos"), F.col("val").alias("pval")
-        )
-        joined = (
-            g.join(b, ["vec_id", "ppos"])
-            .join(F.broadcast(u), "pos")
-            .join(fh, "vec_id")
-        )
+    )
+    # ONE emit pass: partner value (cross-subspace Givens pair) via
+    # equi self-join, Householder f per vec, then the 4 candidates
+    # as an inline explode — identity stays unrounded
+    g = x.withColumn(
+        "ppos",
+        F.when(F.col("pos") <= 32, F.col("pos") + 32).otherwise(
+            F.col("pos") - 32
+        ),
+    )
+    b = x.select(
+        "vec_id", F.col("pos").alias("ppos"), F.col("val").alias("pval")
+    )
+    joined = (
+        g.join(b, ["vec_id", "ppos"])
+        .join(F.broadcast(u), "pos")
+        .join(fh, "vec_id")
+    )
 
-        def giv_expr(c: float, sn: float):
-            return (
-                F.round(
-                    F.when(
-                        F.col("pos") <= 32,
-                        c * F.col("val") - sn * F.col("pval"),
-                    ).otherwise(sn * F.col("pval") + c * F.col("val"))
-                    + 1e-9,
-                    6,
-                )
-                + 0.0
+    def giv_expr(c: float, sn: float):
+        return (
+            F.round(
+                F.when(
+                    F.col("pos") <= 32,
+                    c * F.col("val") - sn * F.col("pval"),
+                ).otherwise(sn * F.col("pval") + c * F.col("val"))
+                + 1e-9,
+                6,
             )
-
-        cands = F.array(
-            F.col("val"),
-            F.round(F.col("val") - F.col("f") * F.col("uv") + 1e-9, 6) + 0.0,
-            giv_expr(_OPQ_COS4, _OPQ_COS4),
-            giv_expr(_OPQ_COS8, _OPQ_SIN8),
+            + 0.0
         )
-        return joined.select(
-            "vec_id", "pos", F.posexplode(cands).alias("c", "xr")
-        ).select(F.col("c").cast("long").alias("cand"), "vec_id", "pos", "xr")
 
-    return memo_persist("opq_xr", spark, sf_dir, build)
+    cands = F.array(
+        F.col("val"),
+        F.round(F.col("val") - F.col("f") * F.col("uv") + 1e-9, 6) + 0.0,
+        giv_expr(_OPQ_COS4, _OPQ_COS4),
+        giv_expr(_OPQ_COS8, _OPQ_SIN8),
+    )
+    return joined.select(
+        "vec_id", "pos", F.posexplode(cands).alias("c", "xr")
+    ).select(F.col("c").cast("long").alias("cand"), "vec_id", "pos", "xr")
 
 
+@memo("opq_bd_all")
 def _opq_bd_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cand, vec_id, sub, code, d2): per-candidate per-(vec, sub,
     code) 8dp squared distances against the shared hash-derived
@@ -3110,32 +3074,30 @@ def _opq_bd_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     (distortion, per-candidate ADC recall, and the chosen-candidate
     search leg all cut from it)."""
 
-    def build() -> DataFrame:
-        xr = _opq_rotations(spark, sf_dir)
-        dims = xr.select(
-            "cand",
-            "vec_id",
-            ((F.col("pos") - 1) / _PQ_SUBDIM).cast("long").alias("sub"),
-            ((F.col("pos") - 1) % _PQ_SUBDIM).alias("sdim"),
-            F.col("xr").alias("x"),
+    xr = _opq_rotations(spark, sf_dir)
+    dims = xr.select(
+        "cand",
+        "vec_id",
+        ((F.col("pos") - 1) / _PQ_SUBDIM).cast("long").alias("sub"),
+        ((F.col("pos") - 1) % _PQ_SUBDIM).alias("sdim"),
+        F.col("xr").alias("x"),
+    )
+    return (
+        dims.join(F.broadcast(_pq_codebook(spark)), ["sub", "sdim"])
+        .groupBy("cand", "vec_id", "sub", "code")
+        .agg(
+            F.round(
+                F.sum(
+                    (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
+                )
+                + 1e-9,
+                8,
+            ).alias("d2")
         )
-        return (
-            dims.join(F.broadcast(_pq_codebook(spark)), ["sub", "sdim"])
-            .groupBy("cand", "vec_id", "sub", "code")
-            .agg(
-                F.round(
-                    F.sum(
-                        (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
-                    )
-                    + 1e-9,
-                    8,
-                ).alias("d2")
-            )
-        )
-
-    return memo_persist("opq_bd_all", spark, sf_dir, build)
+    )
 
 
+@memo("opq_adc_all")
 def _opq_adc_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cand, query_id, vec_id, adc_dist): the ADC scan per candidate
     rotation — stored-code argmin ⋈ broadcast per-query LUT, the
@@ -3144,12 +3106,6 @@ def _opq_adc_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate search leg and the recall table all rank from it, and
     the code-argmin window above the bd relation is the expensive
     stage they'd otherwise each repeat."""
-    return memo_persist(
-        "opq_adc_all", spark, sf_dir, lambda: _opq_adc_all_build(spark, sf_dir)
-    )
-
-
-def _opq_adc_all_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     bd = _opq_bd_all(spark, sf_dir)
     # code argmin as a struct-min aggregate instead of a row_number
     # window (VERDICT r9 #5): min(struct(d2, code)) picks the same
@@ -4632,7 +4588,7 @@ def embeddings_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memo pricing (round 14, VERDICT r13 #1): the PUBLIC query builds
     the graph fresh on every invocation, so its own timed bench row
     prices the full build — round 13 had made this entry a
-    ``memo_persist`` read, which let the row price a cache hit of
+    session-memo read, which let the row price a cache hit of
     work done in the untimed prewarm. The session memo (`knn_graph`
     slot) remains for the two downstream consumers
     (`embeddings_intrinsic_dim`, `embeddings_hubness_audit`) via
@@ -4640,15 +4596,6 @@ def embeddings_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the builder row's attribution changed.
     """
     return _knn_graph_build(spark, sf_dir)
-
-
-def _knn_graph_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized graph for downstream consumers (the
-    `neardup_candidates` discipline); the public query deliberately
-    does NOT read this — see embeddings_knn_graph's pricing note."""
-    return memo_persist(
-        "knn_graph", spark, sf_dir, lambda: _knn_graph_build(spark, sf_dir)
-    )
 
 
 def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4754,6 +4701,12 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "rank", "nbr_id", "cos")
         .orderBy("vec_id", "rank")
     )
+
+
+# session-memoized graph for downstream consumers (the
+# `neardup_candidates` discipline); the public query deliberately does
+# NOT read this — see embeddings_knn_graph's pricing note
+_knn_graph_memo = memo("knn_graph")(_knn_graph_build)
 
 
 embeddings_knn_graph.__doc__ = embeddings_knn_graph.__doc__.format(

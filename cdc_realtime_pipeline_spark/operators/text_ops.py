@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 from cdc_realtime_pipeline_spark.functions import text as TX
 from cdc_realtime_pipeline_spark.session import (
     load_table,
-    memo_persist,
+    memo,
     tracked_persist,
 )
 
@@ -81,6 +81,7 @@ FROM feat2 ORDER BY doc_id
 """
 
 
+@memo("quality_scores")
 def _quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session memo: (doc_id, quality) — the composite quality score
     shared by the curation consumers (weighted sample, weighted
@@ -89,15 +90,8 @@ def _quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     guide §5). Built unordered (consumers aggregate); the
     ``text_quality`` query itself keeps its full-featured ordered
     output and shares the same ``TX.quality_score`` expression."""
-    from cdc_realtime_pipeline_spark.session import memo_persist
-
-    return memo_persist(
-        "quality_scores",
-        spark,
-        sf_dir,
-        lambda: load_table(spark, sf_dir, "documents").select(
-            "doc_id", TX.quality_score(F.col("text")).alias("quality")
-        ),
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", TX.quality_score(F.col("text")).alias("quality")
     )
 
 
@@ -188,6 +182,7 @@ _TFIDF_QUERY_TERMS = ["stream", "window", "hash"]
 _TFIDF_TOPK = 20
 
 
+@memo("tfidf_weights")
 def _tfidf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized (doc_id, word, wt, idf) TF-IDF weight relation
     — the ONE corpus×terms pass the sparse-retrieval family shares
@@ -203,47 +198,42 @@ def _tfidf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index staging table a retrieval deployment builds once
     and amortizes across every query/eval job (SCALING.md cross-ref:
     retrieval_ndcg_agreement row). Values are bit-identical: the
-    expressions are unchanged, only factored behind memo_persist.
+    expressions are unchanged, only factored behind the session memo.
     """
     from cdc_realtime_pipeline_spark.operators.dedup import doc_words
 
-    def build():
-        docs = doc_words(spark, sf_dir)
-        tokens = docs.select(
-            "doc_id", F.explode("words").alias("word")
-        ).filter(F.length("word") > 0)
-        n_docs = docs.agg(F.count("*").alias("n_docs"))
-        tf = tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-        df = tf.groupBy("word").agg(F.count("*").alias("df"))
-        idf = df.crossJoin(F.broadcast(n_docs)).select(
-            "word",
-            F.round(F.log(F.col("n_docs") / F.col("df")), 8).alias("idf"),
-        )
-        return tf.join(idf, "word").select(
-            "doc_id",
-            "word",
-            (F.col("tf") * F.col("idf")).alias("wt"),
-            "idf",
-        )
-
-    return memo_persist("tfidf_weights", spark, sf_dir, build)
+    docs = doc_words(spark, sf_dir)
+    tokens = docs.select(
+        "doc_id", F.explode("words").alias("word")
+    ).filter(F.length("word") > 0)
+    n_docs = docs.agg(F.count("*").alias("n_docs"))
+    tf = tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    df = tf.groupBy("word").agg(F.count("*").alias("df"))
+    idf = df.crossJoin(F.broadcast(n_docs)).select(
+        "word",
+        F.round(F.log(F.col("n_docs") / F.col("df")), 8).alias("idf"),
+    )
+    return tf.join(idf, "word").select(
+        "doc_id",
+        "word",
+        (F.col("tf") * F.col("idf")).alias("wt"),
+        "idf",
+    )
 
 
+@memo("tfidf_doc_norms")
 def _tfidf_doc_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized (doc_id, doc_norm): the true-cosine norm
     aggregate over ``_tfidf_weights`` (see its docstring for the
     100 TB amortization argument)."""
-    return memo_persist(
-        "tfidf_doc_norms",
-        spark,
-        sf_dir,
-        lambda: _tfidf_weights(spark, sf_dir)
+    return (
+        _tfidf_weights(spark, sf_dir)
         .groupBy("doc_id")
         .agg(
             F.sqrt(F.sum(F.round(F.col("wt") * F.col("wt"), 8))).alias(
                 "doc_norm"
             )
-        ),
+        )
     )
 
 

@@ -1,11 +1,12 @@
 """Untimed session-memo prewarm (VERDICT r9 #3).
 
-Session memos (``memo_persist``) are built lazily by their FIRST
-consumer, so a timed sweep that runs queries in registry/alphabetical
-order silently charges each memo's build cost to whichever consumer
-happens to sort first — ``corpus_softdedup_weights`` read 13.5 s in
-BENCH_r09 because alphabetical order made it the CC-labels builder,
-a number that would shift if any earlier-sorting consumer landed.
+Session memos (``@memo`` in ``session.py``) are built lazily by their
+FIRST consumer, so a timed sweep that runs queries in
+registry/alphabetical order silently charges each memo's build cost to
+whichever consumer happens to sort first — ``corpus_softdedup_weights``
+read 13.5 s in BENCH_r09 because alphabetical order made it the
+CC-labels builder, a number that would shift if any earlier-sorting
+consumer landed.
 
 ``prewarm_memos`` materializes every memo slot explicitly, so callers
 (bench.py) can pay the build cost in an untimed pass — the ``_calib()``
@@ -13,16 +14,17 @@ discipline applied to memos. Per-query timed lines then measure
 steady-state consumption regardless of execution order, and the build
 cost is priced separately in the artifact (``memo_prewarm_sec``).
 
-The slot list is maintained by hand next to the memo owners; a test
-(tests/test_plans.py) asserts it covers every ``memo_persist`` slot in
-the package so a new memo cannot silently re-introduce first-consumer
-attribution.
+The slot list IS the set of ``@memo`` declarations, read from the
+session layer after the query registry has imported every operator
+module; declaration order puts each memo after the memos it builds on
+(neardup_candidates after neardup_shingles/neardup_docs, opq_adc_all
+after opq_xr/opq_bd_all), so each slot's own build cost is visible.
 
 FROZEN as of round 14 (VERDICT r13 #1 accounting contract): the slot
-set below is the cross-round comparison basis. Adding a slot moves
-work from the timed region into the untimed prewarm, which inflates
-the headline without removing work — any addition therefore requires
-a recorded justification in BENCH_NOTES.md §Round 14 and fails
+set is the cross-round comparison basis. Adding a slot moves work from
+the timed region into the untimed prewarm, which inflates the headline
+without removing work — any addition therefore requires a recorded
+justification in BENCH_NOTES.md §Round 14 and fails
 tests/test_round14_opt.py until the frozen list there is updated in
 the same change. bench.py emits ``headline_plus_prewarm_sec`` so the
 all-in figure travels on every line.
@@ -32,57 +34,17 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from cdc_realtime_pipeline_spark.session import load_table
-
-# slot name -> callable(spark, sf_dir) returning the memoized DataFrame.
-# Order matters only for nesting (opq_adc_all builds opq_xr/opq_bd_all;
-# neardup_candidates builds neardup_shingles/neardup_docs) — parents
-# are listed anyway so each slot's own build cost is visible.
+from cdc_realtime_pipeline_spark.session import MEMO_SLOTS
 
 
 def _slots():
-    from cdc_realtime_pipeline_spark.operators import (
-        corpus_ops,
-        dedup,
-        extended,
-        similarity,
-        text_ops,
-    )
+    # the registry imports every operator module, which runs their
+    # @memo declarations
+    import cdc_realtime_pipeline_spark.plans.registry  # noqa: F401
 
-    return {
-        "basket_items": extended._basket_items,
-        "basket_pairs": extended._basket_pair_counts,
-        "journey_counts": extended._journey_counts,
-        "neardup_docs": dedup.docs_with_dupes,
-        "doc_words": dedup.doc_words,
-        "tfidf_weights": text_ops._tfidf_weights,
-        "tfidf_doc_norms": text_ops._tfidf_doc_norms,
-        "quality_scores": text_ops._quality_scores,
-        "neardup_shingles": dedup._shared_shingles,
-        "neardup_sets": dedup._shared_sets,
-        "neardup_candidates": dedup._verified_candidates,
-        "minhash_sigs16": dedup._minhash_sigs16,
-        "neardup_cc_labels": corpus_ops._dup_component_labels,
-        "lpa_labels": corpus_ops._lpa_labels,
-        "pq_base_dists": lambda spark, sf_dir: similarity._pq_base_dists(
-            spark, load_table(spark, sf_dir, "embeddings"), sf_dir
-        ),
-        "opq_xr": similarity._opq_rotations,
-        "opq_bd_all": similarity._opq_bd_all,
-        "opq_adc_all": similarity._opq_adc_all,
-        "sem_labels": similarity._sem_cluster_labels,
-        # the memoized accessor, NOT the public query: since round 14
-        # the public embeddings_knn_graph builds fresh so its timed row
-        # prices its own build (VERDICT r13 #1); this slot prewarms the
-        # shared graph for intrinsic_dim/hubness_audit only
-        "knn_graph": similarity._knn_graph_memo,
-        # not a memo_persist slot: a cached scalar (embeddings count)
-        # that seeds dedup_embeddings_cosine's derived LSH geometry —
-        # priced untimed here for the same first-consumer reason
-        "emb_count": similarity._corpus_count_prewarm,
-    }
+    return dict(MEMO_SLOTS)
 
 
 def prewarm_memos(spark: SparkSession, sf_dir: str) -> dict[str, float]:
@@ -91,7 +53,9 @@ def prewarm_memos(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     out: dict[str, float] = {}
     for slot, fn in _slots().items():
         t0 = time.time()
-        fn(spark, sf_dir).count()
+        value = fn(spark, sf_dir)
+        if isinstance(value, DataFrame):  # scalar memos are built by the call
+            value.count()
         out[slot] = round(time.time() - t0, 3)
     return out
 

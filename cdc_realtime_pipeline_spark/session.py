@@ -9,9 +9,12 @@ of driver-side collects, so the plans carry over unchanged.
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -190,75 +193,97 @@ def release_caches() -> int:
     return n
 
 
-# Session-scoped materialized intermediates — shared subplans several
-# QUERIES build on (the near-dup shingle/candidate tables). Unlike
-# tracked_persist, these SURVIVE release_caches(), so a session running
-# the whole registry (bench, correctness sweep, the driver) pays for
-# each shared stage once instead of once per consuming query. Bounded
-# by construction: one entry per slot, keyed by (session, sf_dir) —
-# a new session or a different fixture dir releases and rebuilds.
-_MEMOIZED: dict[str, tuple[int, str, object]] = {}
+# Session state: the one store for everything cached per SparkSession —
+# the shared subplans several QUERIES build on (shingle/candidate/PQ
+# tables), per-fixture scalars (corpus counts), one-time session setup
+# (data-source registration) and streaming results two queries share.
+# Unlike tracked_persist, entries SURVIVE release_caches(), so a
+# session running the whole registry (bench, correctness sweep, the
+# driver) pays for each once instead of once per consuming query.
+#
+# key -> (session UUID, sf_dir, value). Bounded by construction: one
+# entry per key; a different session or fixture dir replaces the entry
+# and unpersists the old value. The JVM session UUID is never reused
+# (a Python id() can be, once the old session is collected). Each key
+# has its own lock, so a cold key builds exactly once however many
+# threads ask for it (the plan sweep builds from a thread pool), and
+# no losing build leaks a persist.
+#
+# STATIC-FIXTURE ASSUMPTION (ADVICE r8): entries are never invalidated
+# on underlying-data change — the fixture dirs are immutable for the
+# life of a session (the driver/bench/test contract). Any tool that
+# REWRITES a fixture dir mid-session must call release_memos()
+# afterwards or memoized shingle/candidate/PQ tables and counts will
+# serve stale results.
+_STATE: dict[str, tuple[str, str | None, object]] = {}
+_LOCKS: dict[str, threading.Lock] = {}
+_LOCKS_GUARD = threading.Lock()
 
-# Scalar/side caches that ride the same static-fixture assumption as
-# the memos (e.g. similarity's embeddings-count cache feeding the
-# derived LSH geometry). Operator modules REGISTER their cache dicts
-# here at import time so release_memos() clears them without the
-# session layer importing operator modules (round-12 review: the
-# dependency must point operator → session, not the reverse).
-_SESSION_CACHES: list[dict] = []
+# slot -> memoized (spark, sf_dir) builder, in declaration order: every
+# @memo declaration, which plans/prewarm.py builds untimed.
+MEMO_SLOTS: dict[str, Callable] = {}
 
 
-def register_session_cache(cache: dict) -> dict:
-    """Register a module-level cache dict to be cleared by
-    ``release_memos()``. Returns the dict so it can be used inline:
-    ``_MY_CACHE = register_session_cache({})``."""
-    _SESSION_CACHES.append(cache)
-    return cache
-
-
-def memo_persist(slot: str, spark, sf_dir: str, build):
-    """Return the memoized persisted DataFrame for ``slot`` at
-    ``sf_dir``, building (and persisting) it on first use per
-    (session, sf_dir). ``build`` is a zero-arg callable.
-
-    STATIC-FIXTURE ASSUMPTION (ADVICE r8): entries survive
-    release_caches() by design and are never invalidated on
-    underlying-data change — the fixture dirs are immutable for the
-    life of a session (the driver/bench/test contract). Any tool that
-    REWRITES a fixture dir mid-session must call release_memos()
-    afterwards or memoized shingle/candidate/PQ tables will serve
-    stale results."""
-    cur = _MEMOIZED.get(slot)
-    sid = id(spark)
-    if cur is not None and cur[0] == sid and cur[1] == sf_dir:
+def session_state(key: str, spark: SparkSession, sf_dir: str | None, build: Callable):
+    """The value stored under ``key`` for this session and ``sf_dir``;
+    on first use ``build()`` (zero-arg) makes it, under the key's lock."""
+    sid = spark._jsparkSession.sessionUUID()
+    cur = _STATE.get(key)
+    if cur is not None and cur[:2] == (sid, sf_dir):
         return cur[2]
-    if cur is not None:
-        try:
-            cur[2].unpersist()
-        except Exception:  # previous session already stopped
-            pass
-    df = build()
-    df.persist()
-    _MEMOIZED[slot] = (sid, sf_dir, df)
-    return df
+    with _LOCKS_GUARD:
+        lock = _LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        cur = _STATE.get(key)
+        if cur is not None:
+            if cur[:2] == (sid, sf_dir):
+                return cur[2]
+            del _STATE[key]
+            _unpersist(cur[2])
+        value = build()
+        _STATE[key] = (sid, sf_dir, value)
+        return value
+
+
+def memo(slot: str):
+    """Declare a session memo on a ``(spark, sf_dir)`` builder:
+    ``@memo("slot")`` persists the DataFrame it returns (or keeps a
+    scalar as is) once per (session, sf_dir), and lists the slot for
+    the untimed prewarm."""
+
+    def declare(build):
+        @functools.wraps(build)
+        def memoized(spark: SparkSession, sf_dir: str):
+            def persisted():
+                value = build(spark, sf_dir)
+                return value.persist() if isinstance(value, DataFrame) else value
+
+            return session_state(slot, spark, sf_dir, persisted)
+
+        MEMO_SLOTS[slot] = memoized
+        return memoized
+
+    return declare
+
+
+def _unpersist(value) -> bool:
+    if not getattr(value, "is_cached", False):
+        return False
+    try:
+        value.unpersist()
+    except Exception:  # previous session already stopped
+        return False
+    return True
 
 
 def release_memos() -> int:
-    """Unpersist every memoized intermediate (test/maintenance hook)."""
+    """Drop every session-state entry (test/maintenance hook); returns
+    how many persisted DataFrames were released."""
     n = 0
-    for key in list(_MEMOIZED):
-        _, _, df = _MEMOIZED.pop(key)
-        try:
-            df.unpersist()
+    for key in list(_STATE):
+        entry = _STATE.pop(key, None)
+        if entry is not None and _unpersist(entry[2]):
             n += 1
-        except Exception:
-            pass
-    # registered scalar caches ride the same static-fixture assumption
-    # as the memos — a tool that rewrites a fixture dir mid-session
-    # (scale_probe._build) must not serve stale values (e.g. a stale
-    # embeddings count into the derived LSH geometry)
-    for cache in _SESSION_CACHES:
-        cache.clear()
     return n
 
 

@@ -50,6 +50,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from cdc_realtime_pipeline_spark.session import session_state
+
 
 class CdcEnvelopeDataSource(DataSource):
     """``spark.read.format("cdc_envelope").option("path", dir)`` over a
@@ -379,10 +381,6 @@ class CdcEnvelopeWriter(DataSourceArrowWriter):
                 pass
 
 
-_REGISTER_LOCK = None  # created lazily to keep module import light
-_REGISTERED_SESSIONS: dict = {}
-
-
 def register(spark) -> None:
     """Idempotent, once-per-session registration of the format name.
 
@@ -390,18 +388,12 @@ def register(spark) -> None:
     session's lookup entry; doing that concurrently with another
     thread's ``lookupDataSource`` (the repo-wide plan sweep builds
     queries from a thread pool — round 14) intermittently fails the
-    in-flight ``save()``. A per-session flag plus a lock makes repeat
-    calls free and first calls race-safe."""
-    global _REGISTER_LOCK
-    if _REGISTER_LOCK is None:
-        import threading
-
-        _REGISTER_LOCK = threading.Lock()
-    sid = id(spark)
-    if _REGISTERED_SESSIONS.get(sid):
-        return
-    with _REGISTER_LOCK:
-        if _REGISTERED_SESSIONS.get(sid):
-            return
-        spark.dataSource.register(CdcEnvelopeDataSource)
-        _REGISTERED_SESSIONS[sid] = True
+    in-flight ``save()``. Registering through the session-state store
+    runs it once per session under the key's lock, so repeat calls are
+    free and concurrent first calls register once."""
+    session_state(
+        "cdc_envelope_format",
+        spark,
+        None,
+        lambda: spark.dataSource.register(CdcEnvelopeDataSource),
+    )

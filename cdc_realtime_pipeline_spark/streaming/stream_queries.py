@@ -30,6 +30,7 @@ from cdc_realtime_pipeline_spark.session import (
     load_table,
     raw_schema,
     scratch_dir,
+    session_state,
 )
 from cdc_realtime_pipeline_spark.operators import curation as _curation_oracles
 from cdc_realtime_pipeline_spark.operators import dq as _dq_oracles
@@ -682,13 +683,6 @@ GROUP BY market, ws
 """
 
 
-# the detector's memory-sink table per sf_dir: the full stateful run
-# costs ~8 s, and two registered queries consume it (the rows-only
-# alert stream and its oracle-gated rule-count twin) — one streaming
-# execution per session serves both
-_ALERTS_CACHE: dict[str, DataFrame] = {}
-
-
 def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful anomaly detector over the synthesized CDC stream.
 
@@ -698,12 +692,17 @@ def stream_anomaly_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py asserts rule-level equivalence against
     hand-computed fixtures.
     """
-    if sf_dir not in _ALERTS_CACHE:
-        raw = spark.readStream.format("text").load(_cdc_topic(spark, sf_dir))
-        parsed = parse_cdc_events(raw)
-        alerts = apply_anomaly_detector(parsed)
-        _ALERTS_CACHE[sf_dir] = _memory_sink(alerts, "append", src=_cdc_topic(spark, sf_dir))
-    return _ALERTS_CACHE[sf_dir]
+    # the full stateful run costs ~8 s, and two registered queries
+    # consume its memory-sink table (this rows-only stream and its
+    # oracle-gated rule-count twin): one streaming execution per
+    # (session, sf_dir) serves both
+    def run() -> DataFrame:
+        topic = _cdc_topic(spark, sf_dir)
+        raw = spark.readStream.format("text").load(topic)
+        alerts = apply_anomaly_detector(parse_cdc_events(raw))
+        return _memory_sink(alerts, "append", src=topic)
+
+    return session_state("stream_anomaly_alerts", spark, sf_dir, run)
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

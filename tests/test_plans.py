@@ -409,21 +409,32 @@ def test_repo_wide_no_cartesian_no_rowwise_python(spark):
 
 
 def test_prewarm_covers_every_memo_slot():
-    """Every ``memo_persist`` slot in the package must appear in
+    """Every ``memo("slot")`` declaration in the package must reach
     plans/prewarm.py's slot table — otherwise a new memo silently
     re-introduces first-consumer build attribution into the bench's
-    per-query lines (VERDICT r9 #3)."""
+    per-query lines (VERDICT r9 #3). Session state kept outside
+    ``@memo`` must not be a shared persisted subplan: only the listed
+    scalar/setup/stream entries may call the store directly."""
     import pathlib
     import re
 
     from cdc_realtime_pipeline_spark.plans.prewarm import known_slots
 
     pkg = pathlib.Path("cdc_realtime_pipeline_spark")
-    declared = set()
+    declared, direct = set(), set()
     for py in pkg.rglob("*.py"):
-        if py.name == "prewarm.py":
-            continue
-        for m in re.finditer(r'memo_persist\(\s*"([a-z0-9_]+)"', py.read_text()):
-            declared.add(m.group(1))
+        src = py.read_text()
+        # `@memo("slot")` decorators and `name = memo("slot")(builder)`
+        declared.update(
+            re.findall(r'(?m)^(?:\s*@|.*= )memo\(\s*"([a-z0-9_]+)"\)', src)
+        )
+        direct.update(re.findall(r'\bsession_state\(\s*"([a-z0-9_]+)"', src))
     missing = declared - known_slots()
     assert not missing, f"memo slots absent from prewarm table: {missing}"
+    # the base-docs count (geometry input), the data-source
+    # registration and the alert stream's memory-sink table
+    unpersisted = {"docs_count", "cdc_envelope_format", "stream_anomaly_alerts"}
+    assert direct == unpersisted, (
+        f"session state outside @memo: {direct - unpersisted} — declare "
+        "a shared persisted subplan with @memo so prewarm builds it"
+    )

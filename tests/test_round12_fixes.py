@@ -211,16 +211,13 @@ def test_banded_cosine_bits_only_override_matches_exact(spark, sf_dir):
     )
 
 
-def test_release_memos_clears_registered_session_caches():
-    """The embeddings-count cache is registered with the session layer
-    (not hard-coded there): release_memos() must clear it so
-    fixture-rewriting tools can't serve a stale count into the
-    derived geometry."""
-    from cdc_realtime_pipeline_spark.operators.similarity import (
-        _EMB_COUNT_CACHE,
-    )
-    from cdc_realtime_pipeline_spark.session import release_memos
+def test_release_memos_clears_registered_session_caches(spark):
+    """The embeddings count lives in the session-state store with the
+    memos: release_memos() must clear it so fixture-rewriting tools
+    can't serve a stale count into the derived geometry."""
+    from cdc_realtime_pipeline_spark.session import release_memos, session_state
 
-    _EMB_COUNT_CACHE["/tmp/fake_dir"] = 12345
+    assert session_state("emb_count", spark, "/tmp/fake_dir", lambda: 12345) == 12345
     release_memos()
-    assert "/tmp/fake_dir" not in _EMB_COUNT_CACHE
+    # a cleared entry rebuilds; a surviving one would still read 12345
+    assert session_state("emb_count", spark, "/tmp/fake_dir", lambda: 0) == 0

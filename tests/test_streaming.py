@@ -221,39 +221,6 @@ def test_corrupt_records_mid_stream_do_not_kill_the_query(spark, sf_dir):
     assert res.count() == n_events  # good rows all parsed, bad rows dropped
 
 
-def test_tws_detector_matches_applyinpandas_detector(spark, sf_dir):
-    # the transformWithStateInPandas implementation must emit exactly
-    # the alerts the applyInPandasWithState one does
-    import pytest
-
-    from cdc_realtime_pipeline_spark.streaming.anomaly_tws import (
-        apply_anomaly_detector_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas needs google.protobuf (absent here)")
-    from cdc_realtime_pipeline_spark.streaming.stream_queries import _memory_sink
-
-    stream_dir, _ = _make_stream(spark, sf_dir)
-
-    def run(builder):
-        parsed = parse_cdc_events(
-            spark.readStream.format("text").load(stream_dir)
-        )
-        out = _memory_sink(builder(parsed), "append")
-        return {
-            (r["market"], r["alert_type"], r["trade_id"])
-            for r in out.select("market", "alert_type", "trade_id").collect()
-        }
-
-    from cdc_realtime_pipeline_spark.streaming.anomaly_stateful import (
-        apply_anomaly_detector,
-    )
-
-    assert run(apply_anomaly_detector_tws) == run(apply_anomaly_detector)
-
-
 def test_latency_mv_merge_and_compact(spark, sf_dir):
     stream_dir, _ = _make_stream(spark, sf_dir)
     mv_dir = tempfile.mkdtemp(prefix="mv_") + "/t"

@@ -332,7 +332,7 @@ def _build(spark, m: int) -> str:
     open(marker, "w").write("ok")
     # this session just (re)wrote a fixture dir — drop any session
     # memos so memoized shingle/candidate/PQ tables keyed on this dir
-    # can't serve stale pre-rewrite results (memo_persist's
+    # can't serve stale pre-rewrite results (the session store's
     # static-fixture assumption, ADVICE r8)
     from cdc_realtime_pipeline_spark.session import release_memos
 
